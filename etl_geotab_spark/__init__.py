@@ -19,6 +19,12 @@ Layout
   (reference parity: task.ts:147-219, 294).
 - ``streaming`` — Structured Streaming equivalents (watermark horizon,
   tumbling/sliding/session windows, scheduled re-pull).
+- ``pyworker``  — per-task import-cache cost cut inside PySpark
+  workers, installed on import.
 """
+
+from etl_geotab_spark import pyworker as _pyworker
+
+_pyworker.install()
 
 __version__ = "0.1.0"

@@ -40,11 +40,17 @@ def release_checkpoint(df: DataFrame) -> bool:
     """Free the storage blocks behind a ``localCheckpoint``-ed
     DataFrame. Only call once nothing will read ``df`` again: a
     checkpoint's lineage is truncated, so its data CANNOT be recomputed
-    after release. Returns True iff blocks were released."""
+    after release. Returns True iff blocks were released; anything
+    whose analyzed root is not the checkpoint's ``LogicalRDD`` node
+    over a persisted RDD is a ``False`` no-op."""
     try:
         plan = df._jdf.queryExecution().analyzed()
-        # LogicalRDD (the checkpoint's plan node) carries the RDD
-        plan.rdd().unpersist(False)
+        if plan.getClass().getSimpleName() != "LogicalRDD":
+            return False
+        rdd = plan.rdd()
+        if not rdd.getStorageLevel().isValid():
+            return False
+        rdd.unpersist(False)
         return True
     except Exception:
         return False

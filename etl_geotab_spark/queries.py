@@ -378,6 +378,70 @@ _R01_REFRESH: list[str] = [
 ]
 
 
+# Round-19 window — the proposer's output verbatim (`python
+# tools/freshness.py --propose` at the r18 close base 78449a9, run
+# against the worker import-hook diff so the §21 guard tier is live):
+# (0) 7 guard pulls — geotab_connector_pipeline (the duplicate pushdown
+# conf set left run_connector_pipeline) and the release_checkpoint
+# adopters (the helper now refuses non-checkpoint roots); then (a) the
+# rotation tail: the three r13 rows-only entries, then the oldest r14
+# rows, 7+43 = 50.
+_ROUND19_WINDOW: list[str] = [
+    # (0) §21 guard pulls, proposer order
+    "geotab_connector_pipeline",
+    "dedup_clusters",
+    "pagerank_parts",
+    "entity_resolution",
+    "bpe_learn_merges",
+    "hotspot_regions",
+    "dedup_keep_best",
+    # (a) rotation tail, oldest first
+    "logreg_train",
+    "holt_forecast",
+    "forecast_backtest",
+    "geotab_flagship",
+    "collect_array_agg",
+    "scan_filter_project",
+    "string_functions",
+    "math_functions",
+    "conditional_functions",
+    "json_functions",
+    "set_ops",
+    "distinct_values",
+    "text_stats",
+    "token_frequencies",
+    "percentiles",
+    "cube_agg",
+    "union_all_tagged",
+    "map_functions",
+    "struct_geojson",
+    "array_norms",
+    "haversine_distance",
+    "text_quality",
+    "multimodal_frame_sample",
+    "multimodal_decode_stats",
+    "range_join_events",
+    "salted_skew_join",
+    "chunk_documents",
+    "pivot_returnflag",
+    "grouping_sets",
+    "hash_sample",
+    "quality_filter_pipeline",
+    "cdc_apply",
+    "kmv_distinct",
+    "event_transitions",
+    "table_stats",
+    "snapshot_diff",
+    "rolling_p95",
+    "nested_assembly",
+    "rollup_cascade",
+    "retention_purge",
+    "late_data_audit",
+    "asof_nearest_clicks",
+    "attribution_last_touch",
+]
+
+
 # Round-18 window — the proposer's output verbatim (`python
 # tools/freshness.py --propose` at the r17 close base 8d6c32f, run
 # against the round-18 optimization diff so the §21 guard tier is
@@ -1282,7 +1346,8 @@ _ROUND7_WINDOW: list[str] = [
 def _ordered_names() -> list[str]:
     names = list(_REGISTRY)
     head_lists = (
-        _ROUND18_WINDOW
+        _ROUND19_WINDOW
+        + _ROUND18_WINDOW
         + _ROUND17_WINDOW
         + _ROUND16_WINDOW
         + _ROUND15_WINDOW

@@ -108,6 +108,36 @@ def test_block_release_helpers(spark):
     assert persistent_rdd_count(spark) == 0
 
 
+def test_release_checkpoint_misuse_is_noop(spark, tmp_path):
+    """release_checkpoint on anything but a checkpoint (a range or
+    parquet frame, a cached plan, an RDD-backed frame) returns False
+    and frees nothing."""
+    from etl_geotab_spark.blocks import (
+        persistent_rdd_count,
+        release_all_cached,
+        release_checkpoint,
+    )
+
+    release_all_cached(spark)
+    spark.range(20).write.parquet(str(tmp_path / "p"))
+    cached = spark.range(30).persist()
+    cached.count()
+    pinned = persistent_rdd_count(spark)
+    assert pinned >= 1
+    # an RDD-backed frame has a LogicalRDD root too, but nothing pinned
+    from_rdd = spark.createDataFrame(
+        spark.sparkContext.parallelize([(1,), (2,)]), "a long"
+    )
+    root = from_rdd._jdf.queryExecution().analyzed()
+    assert root.getClass().getSimpleName() == "LogicalRDD"
+    frames = (spark.range(10), spark.read.parquet(str(tmp_path / "p")), cached, from_rdd)
+    for df in frames:
+        assert release_checkpoint(df) is False
+    assert persistent_rdd_count(spark) == pinned
+    assert cached.count() == 30
+    release_all_cached(spark)
+
+
 def test_iterative_operators_bound_pinned_blocks(spark):
     """The iterative operators (pagerank, connected components, BPE)
     release each superseded round's checkpoint (guide §5): after the
